@@ -164,30 +164,6 @@ object Cmf {
     StructField("additionalProperties", MapType(StringType, StringType))
   ))
 
-  /** Full envelope (CommonMessageFormat.kt:467–479). `sourceSpecificData`
-    * is the generic `T` payload → raw JSON text. */
-  val envelopeType: StructType = StructType(Seq(
-    StructField("dateTime", StringType),
-    StructField("epochSource", LongType),
-    StructField("vehicleId", StringType),
-    StructField("deviceId", StringType),
-    StructField("tenantId", StringType),
-    StructField("sourceType", StringType),
-    StructField("partitionKey", StringType),
-    StructField("telemetry", telemetryType),
-    StructField("events", eventsType),
-    StructField("sourceSpecificData", StringType),
-    StructField("meta", metaType)
-  ))
-
-  /** The 20 SourceType enum names (CommonMessageFormat.kt SourceType).
-    * Written exactly (Jackson writes the enum name, e.g. "Geotab" —
-    * GeotabTranslatorTest.kt:58); read case-insensitively. */
-  val sourceTypes: Seq[String] = Seq(
-    "Geotab", "CalAmp", "Gm", "Toyota", "Ford", "DaimlerPro", "FleetComplete",
-    "Volkswagen", "Tesla", "Bmw", "Azuga", "Mb", "PlatformScience", "Samsara",
-    "Stellantis", "Rivian", "Isaac", "Motive", "Hyundai", "OmnitracsOT1")
-
   /** Build a full CommonTelemetry struct column: every field present (in
     * declaration order), overridden fields bound, the rest typed nulls.
     * Keeping the full width means downstream consumers see one stable schema

@@ -28,18 +28,25 @@ object Filterer {
 
   def tenantId(value: Column): Column = get_json_object(value, "$.meta.tenantId")
 
+  /** `!isNullOrBlank` (Kotlin), NULL-safe: false for a NULL key. Kotlin
+    * Char.isWhitespace is Character.isWhitespace(c) ||
+    * Character.isSpaceChar(c), so the non-blank witness must exclude BOTH
+    * classes — javaWhitespace alone misses the SPACE_SEPARATOR chars
+    * isWhitespace rejects (U+00A0 NBSP, U+2007, U+202F), and ASCII \S
+    * missed all Unicode whitespace; either gap routes a blank tenant to a
+    * whitespace-named topic + partition directory.
+    *
+    * The key is referenced ONCE: filter pushdown inlines the key's alias
+    * into every reference, and upstream of the Filterer that alias holds
+    * the whole CMF serialization, so `isNotNull && rlike` would copy it
+    * twice per filter. */
+  private[route] def nonBlank(key: Column): Column =
+    coalesce(key.rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]"), lit(false))
+
   def route(messages: DataFrame): Routed = {
     val t = tenantId(col("value"))
     val withTenant = messages.withColumn("tenantId", t)
-    // Kotlin isNullOrBlank parity: Kotlin Char.isWhitespace is
-    // Character.isWhitespace(c) || Character.isSpaceChar(c), so the
-    // non-blank witness must exclude BOTH classes — javaWhitespace alone
-    // misses the SPACE_SEPARATOR chars isWhitespace rejects (U+00A0 NBSP,
-    // U+2007, U+202F), and ASCII \S missed all Unicode whitespace; either
-    // gap routes a blank tenant to a whitespace-named topic + partition
-    // directory.
-    val ok = col("tenantId").isNotNull &&
-      col("tenantId").rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]")
+    val ok = nonBlank(col("tenantId"))
     Routed(
       routed = withTenant.filter(ok)
         .withColumn("topic",
@@ -100,10 +107,9 @@ object EventTypeSplitter {
             namespace: String = "integration"): Routed = {
     val et = eventType(col("value"))
     val withType = messages.withColumn("eventType", et)
-    // same isNullOrBlank parity as Filterer.route (isWhitespace ∪
-    // isSpaceChar): any Unicode-whitespace-only event type drops
-    val ok = col("eventType").isNotNull &&
-      col("eventType").rlike("[^\\p{javaWhitespace}\\p{javaSpaceChar}]")
+    // same isNullOrBlank parity as Filterer.route: any
+    // Unicode-whitespace-only event type drops
+    val ok = Filterer.nonBlank(col("eventType"))
     Routed(
       routed = withType.filter(ok)
         .withColumn("topic", topicFor(col("eventType"), tenant, namespace)),

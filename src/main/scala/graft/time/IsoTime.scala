@@ -1,29 +1,43 @@
 package graft.time
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import java.time.{DateTimeException, Instant}
+import java.time.chrono.IsoChronology
+import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder, ResolverStyle}
+import java.time.temporal.ChronoField
 
-/** Canonical ISO-8601 timestamp text at UTC, matching what the reference
-  * translators emit via `DateTimeFormatter.ISO_OFFSET_DATE_TIME.withZone(UTC)`
-  * over millisecond instants (GeotabTranslator.kt:89,108–109):
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** Canonical ISO-8601 timestamp text at UTC, in `Instant.toString`'s shape
+  * over millisecond instants:
   *
   *  - offset rendered as `Z`
   *  - no fractional seconds when the instant is whole-second
   *    (GeotabTranslatorTest.kt:60 asserts `"2023-10-26T10:00:00Z"`)
-  *  - millisecond (3-digit) fraction otherwise — instants are built with
-  *    `Instant.ofEpochMilli`, so sub-millisecond digits never occur
+  *  - a 3-digit millisecond fraction otherwise (`.100Z`, `.120Z`)
+  *  - years outside 0000–9999 signed (`-0001`, `+10000`)
   *
-  * Everything here is Catalyst-expression-only (whole-stage-codegen friendly,
-  * no UDFs). The session MUST run with `spark.sql.session.timeZone=UTC`,
-  * which Verify/Bench/test harnesses all set.
+  * The reference translators format with
+  * `DateTimeFormatter.ISO_OFFSET_DATE_TIME.withZone(UTC)`
+  * (GeotabTranslator.kt:89,108–109), which on JDK 17 drops trailing zeros
+  * of the fraction (`.1Z`, `.12Z`); the wire bytes here keep the 3-digit
+  * form, which the DuckDB oracle and TranslatorSpec pin.
+  *
+  * Each function is ONE expression node: a `StaticInvoke` of a java.time
+  * call. A Column used k times in a plan is copied k times, and filter
+  * pushdown re-inlines aliases into predicates, so a multi-node spelling
+  * here multiplies through every translator reference. Output does not
+  * depend on the session time zone.
   */
 object IsoTime {
 
-  // timestamp_millis converts to micros with Math.multiplyExact: beyond
-  // |Long.MaxValue/1000| ms it THROWS (ANSI-independent) — an absurd but
-  // schema-valid epoch must surface as NULL (the quarantine path), never
-  // kill the job. Also beyond java.time's own +/-year-999999999 instant
-  // range date_format would fail; the micros bound is hit first.
+  // Spark timestamps are epoch MICROseconds in a Long: beyond
+  // |Long.MaxValue/1000| ms an instant has no timestamp value, so an
+  // absurd but schema-valid epoch surfaces as NULL (the quarantine path).
   private val MaxSafeMs = Long.MaxValue / 1000L
 
   /** True iff the epoch-millis value survives [[isoFromEpochMillis]] —
@@ -32,22 +46,15 @@ object IsoTime {
     * contract) instead of passing through with a NULL dateTime.
     * between(), not abs()<=: under non-ANSI SQL abs(Long.MinValue) wraps
     * to Long.MinValue (negative), so an abs-guard PASSES the one value it
-    * exists to reject and timestamp_millis throws anyway. */
+    * exists to reject. */
   def representableMs(epochMs: Column): Column =
     epochMs.between(-MaxSafeMs, MaxSafeMs)
 
   /** epoch milliseconds → canonical ISO-8601 UTC string. Null-safe; an
-    * out-of-range epoch (|ms| > Long.MaxValue/1000, where the millis→micros
-    * conversion overflows) yields NULL instead of an ArithmeticException —
-    * poison the record, never the job. */
-  def isoFromEpochMillis(epochMs: Column): Column = {
-    val safe   = when(epochMs.between(-MaxSafeMs, MaxSafeMs), epochMs)
-    val base   = date_format(timestamp_millis(safe), "yyyy-MM-dd'T'HH:mm:ss")
-    val msPart = pmod(safe, lit(1000L))
-    when(safe.isNull, lit(null).cast("string"))
-      .when(msPart === 0L, concat(base, lit("Z")))
-      .otherwise(concat(base, lit("."), lpad(msPart.cast("string"), 3, "0"), lit("Z")))
-  }
+    * out-of-range epoch (|ms| > Long.MaxValue/1000) yields NULL — poison
+    * the record, never the job. */
+  def isoFromEpochMillis(epochMs: Column): Column =
+    invoke("isoOfMillis", StringType, epochMs)
 
   /** epoch seconds → canonical ISO-8601 UTC string (CalAmpTranslator.kt:100–101).
     * try_multiply: under ANSI mode a plain ×1000 on an absurd epoch THROWS —
@@ -60,26 +67,50 @@ object IsoTime {
   /** ISO-8601 string (offset or `Z`, optional fraction) → epoch millis.
     * Mirrors `Instant.parse(s).toEpochMilli()` (GeotabTranslator.kt:108) and
     * yields NULL on unparseable input instead of raising (the poison-message
-    * path — GeotabTranslator.kt:154–157 drops such records). The explicit
-    * patterns matter: a format-less try_to_timestamp also accepts bare dates
-    * and space-separated datetimes that `Instant.parse` rejects, which would
-    * admit records the reference drops.
+    * path — GeotabTranslator.kt:154–157 drops such records). Accepts what
+    * `Instant.parse` accepts except:
     *
-    * Pattern set: Spark's 'S' parser accepts any fraction length in
-    * [1, count(S)] (measured), so widths {0, 3, 9} cover all of
-    * `Instant.parse`'s 0–9 fractional digits — width 0 leads because the
-    * reference formatter suppresses the fraction on whole seconds (the
-    * overwhelmingly common derived shape), 3 catches the millisecond form,
-    * 9 subsumes every other width. `Instant.parse` also accepts
-    * seconds-bearing offsets (+05:30:15), which XXX (hour:minute) rejects —
-    * the XXXXX spellings admit those. Sub-millisecond digits truncate via
-    * unix_millis exactly as `toEpochMilli` does. */
-  def epochMillisFromIso(iso: Column): Column = {
-    val pats = Seq(0, 3, 9).flatMap { n =>
-      val frac = if (n == 0) "" else s".${"S" * n}"
-      Seq(s"yyyy-MM-dd'T'HH:mm:ss${frac}XXX",
-          s"yyyy-MM-dd'T'HH:mm:ss${frac}XXXXX")
+    *  - a `.` with no fraction digits (`…:00.Z`),
+    *  - `T24:00:00` and the leap second `23:59:60` (strict resolution),
+    *  - instants outside Spark's microsecond timestamp range.
+    *
+    * Sub-millisecond digits truncate exactly as `toEpochMilli` does. */
+  def epochMillisFromIso(iso: Column): Column =
+    invoke("millisOfIso", LongType, iso)
+
+  private def invoke(kernel: String, dataType: DataType, arg: Column): Column =
+    Bridge.column(StaticInvoke(getClass, dataType, kernel,
+      Seq(Bridge.expression(arg)), returnNullable = true))
+
+  /** Kernel of [[isoFromEpochMillis]]; public for the generated code. */
+  def isoOfMillis(ms: Long): UTF8String =
+    if (ms < -MaxSafeMs || ms > MaxSafeMs) null
+    else UTF8String.fromString(Instant.ofEpochMilli(ms).toString)
+
+  // ISO_INSTANT's grammar (case-insensitive, signed years past 4 digits,
+  // `+HH:MM[:ss]` or `Z` offsets), with the fraction's `.` requiring a
+  // digit and STRICT field ranges
+  private val isoParser: DateTimeFormatter = new DateTimeFormatterBuilder()
+    .parseCaseInsensitive()
+    .append(DateTimeFormatter.ISO_LOCAL_DATE)
+    .appendLiteral('T')
+    .appendValue(ChronoField.HOUR_OF_DAY, 2).appendLiteral(':')
+    .appendValue(ChronoField.MINUTE_OF_HOUR, 2).appendLiteral(':')
+    .appendValue(ChronoField.SECOND_OF_MINUTE, 2)
+    .optionalStart().appendFraction(ChronoField.NANO_OF_SECOND, 1, 9, true).optionalEnd()
+    .appendOffsetId()
+    .toFormatter()
+    .withChronology(IsoChronology.INSTANCE)
+    .withResolverStyle(ResolverStyle.STRICT)
+
+  /** Kernel of [[epochMillisFromIso]]; public for the generated code. */
+  def millisOfIso(s: UTF8String): java.lang.Long =
+    try {
+      val i = isoParser.parse(s.toString, Instant.from(_))
+      val micros = Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
+        i.getNano / 1000L)
+      Math.floorDiv(micros, 1000L)
+    } catch {
+      case _: DateTimeException | _: ArithmeticException => null
     }
-    unix_millis(coalesce(pats.map(p => try_to_timestamp(iso, lit(p))): _*))
-  }
 }

@@ -63,22 +63,9 @@ object VehicleTranslators {
     StructField("calAmpSpecificValue", StringType)
   ))
 
-  /** FordInputMessage + FordCoordinates (FordTranslator.kt:30–52). The open
-    * `fordExtraData: Map<String,Any>` is re-extracted as raw JSON text. */
-  val fordInputSchema: StructType = StructType(Seq(
-    StructField("vin", StringType),
-    StructField("esn", StringType),
-    StructField("captureTime", LongType),
-    StructField("coords", StructType(Seq(
-      StructField("latValue", DoubleType),
-      StructField("lonValue", DoubleType),
-      StructField("ts", LongType)
-    ))),
-    StructField("vehicleSpeed", DoubleType),
-    StructField("fuelRemainingGallons", DoubleType),
-    StructField("rpm", IntegerType)
-  ))
-
+  /** FordInputMessage's top-level keys (FordTranslator.kt:30–52); the
+    * nested FordCoordinates and the open `fordExtraData: Map<String,Any>`
+    * arrive as raw JSON text. */
   private val fordAllKeys = Seq("vin", "esn", "captureTime", "coords",
     "vehicleSpeed", "fuelRemainingGallons", "rpm", "fordExtraData")
 
@@ -106,6 +93,7 @@ object VehicleTranslators {
     * must poison the record (Jackson parity), not fail the job. */
   private def jd(f: String): Column = expr(s"try_cast(_j_$f AS DOUBLE)")
   private def jl(f: String): Column = expr(s"try_cast(_j_$f AS BIGINT)")
+  private def ji(f: String): Column = expr(s"try_cast(_j_$f AS INT)")
   /** Jackson parity for OPTIONAL numeric fields: absent/null is fine, but a
     * present non-numeric value fails the whole record (InvalidFormatException
     * in the reference's data-class binding). */
@@ -133,7 +121,7 @@ object VehicleTranslators {
       jd("Latitude").isNotNull && jd("Longitude").isNotNull &&
       optNumOk(jd, Seq("Odometer_mi", "EngineSpeed_rpm", "Fuel_Level_pct")) &&
       (j("customGeotabField2").isNull ||
-        expr("try_cast(_j_customGeotabField2 AS INT)").isNotNull) &&
+        ji("customGeotabField2").isNotNull) &&
       !hasUnknownKeys(col("value"), fields)
     val tagged = parsed.withColumn("_ok", coalesce(ok, lit(false)))
 
@@ -150,7 +138,7 @@ object VehicleTranslators {
     // default null-field dropping.
     val ssd = to_json(struct(
       j("customGeotabField1").as("customGeotabField1"),
-      expr("try_cast(_j_customGeotabField2 AS INT)").as("customGeotabField2")))
+      ji("customGeotabField2").as("customGeotabField2")))
     val cmf = Cmf.envelope(dateTime, epochSource, j("Vehicle_ID"), j("Device_ID"),
       lit(tenant), lit("Geotab"), j("Vehicle_ID"), telemetry, ssd,
       Map("translator" -> lit("GeotabTranslator_v1.0")))
@@ -198,16 +186,13 @@ object VehicleTranslators {
     val parsed = jsonTupled(raw, top)
       .select(col("*"),
         json_tuple(col("_j_coords"), sub: _*).as(sub.map(f => s"_j_c_$f")))
-    def jc(f: String): Column = col(s"_j_c_$f")
-    def jcd(f: String): Column = expr(s"try_cast(_j_c_$f AS DOUBLE)")
     val ok = j("vin").isNotNull && j("esn").isNotNull &&
       jl("captureTime").isNotNull &&
       IsoTime.representableMs(jl("captureTime")) && j("coords").isNotNull &&
-      jcd("latValue").isNotNull && jcd("lonValue").isNotNull &&
-      expr("try_cast(_j_c_ts AS BIGINT)").isNotNull &&
-      IsoTime.representableMs(expr("try_cast(_j_c_ts AS BIGINT)")) &&
+      jd("c_latValue").isNotNull && jd("c_lonValue").isNotNull &&
+      jl("c_ts").isNotNull && IsoTime.representableMs(jl("c_ts")) &&
       optNumOk(jd, Seq("vehicleSpeed", "fuelRemainingGallons")) &&
-      (j("rpm").isNull || expr("try_cast(_j_rpm AS INT)").isNotNull) &&
+      (j("rpm").isNull || ji("rpm").isNotNull) &&
       // fordExtraData: Map<String,Any> binding requires a JSON OBJECT.
       // KNOWN LIMITATION (json_tuple type erasure): a STRING value whose
       // text happens to look like an object ("{\"a\":1}") extracts to the
@@ -226,25 +211,20 @@ object VehicleTranslators {
     val tagged = parsed.withColumn("_ok", coalesce(ok, lit(false)))
 
     val dateTime = IsoTime.isoFromEpochMillis(jl("captureTime"))
-    val locTime = IsoTime.isoFromEpochMillis(expr("try_cast(_j_c_ts AS BIGINT)"))
+    val locTime = IsoTime.isoFromEpochMillis(jl("c_ts"))
     val telemetry = Cmf.telemetryStruct(Map(
-      "location" -> struct(locTime.as("timestamp"), jcd("lonValue").as("lon"),
-        jcd("latValue").as("lat")),
+      "location" -> struct(locTime.as("timestamp"), jd("c_lonValue").as("lon"),
+        jd("c_latValue").as("lat")),
       "speedGpsMph" -> jd("vehicleSpeed"),
       "fuelLevelGallon" -> jd("fuelRemainingGallons"),
-      "engineRpm" -> expr("try_cast(_j_rpm AS INT)").cast(DoubleType)
+      "engineRpm" -> ji("rpm").cast(DoubleType)
     ))
     // fordExtraData is forwarded verbatim as raw JSON text; `{}` when absent.
     val ssd = coalesce(j("fordExtraData"), lit("{}"))
     val cmf = Cmf.envelope(dateTime, jl("captureTime"), j("vin"), j("esn"),
       lit(tenant), lit("Ford"), j("vin"), telemetry, ssd,
       Map("translator" -> lit("FordTranslator_v1.0")))
-    Translated(
-      valid = tagged.filter(col("_ok")).drop("_ok")
-        .withColumn("cmf", cmf)
-        .withColumn("cmf_json", CmfJson.wire(col("cmf")))
-        .drop(top.map(f => s"_j_$f") ++ sub.map(f => s"_j_c_$f"): _*),
-      quarantine = tagged.filter(!col("_ok")).select("value"))
+    finish(tagged, cmf, top ++ sub.map(f => s"c_$f"))
   }
 }
 
@@ -254,17 +234,8 @@ object VehicleTranslators {
   * envelope is serialized in two parts and the payload spliced in verbatim. */
 object CmfJson {
   def wire(cmf: Column): Column = {
-    val head = to_json(struct(
-      cmf("dateTime").as("dateTime"),
-      cmf("epochSource").as("epochSource"),
-      cmf("vehicleId").as("vehicleId"),
-      cmf("deviceId").as("deviceId"),
-      cmf("tenantId").as("tenantId"),
-      cmf("sourceType").as("sourceType"),
-      cmf("partitionKey").as("partitionKey"),
-      cmf("telemetry").as("telemetry"),
-      cmf("events").as("events")
-    ), Map("ignoreNullFields" -> "false"))
+    val head = to_json(cmf.dropFields("sourceSpecificData", "meta"),
+      Map("ignoreNullFields" -> "false"))
     val meta = to_json(cmf("meta"), Map("ignoreNullFields" -> "false"))
     concat(
       substring_trailer_drop(head),

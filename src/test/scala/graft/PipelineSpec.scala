@@ -10,25 +10,6 @@ import org.apache.spark.sql.functions._
   * streaming resolution of the same sources. */
 class PipelineSpec extends SparkSpec {
 
-  private def writeSpool(baseDir: String, topic: String, lines: Seq[String]): Unit = {
-    val dir = java.nio.file.Paths.get(baseDir, topic)
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("part-0.txt"),
-      String.join("\n", lines: _*).getBytes("UTF-8"))
-  }
-
-  private def spoolDir(): String = {
-    val base = java.nio.file.Files.createTempDirectory("spool").toString
-    writeSpool(base, Sources.kinesisInput.outputTopic, Seq(
-      """{"Device_ID":"g1","Vehicle_ID":"v1","Record_DateTime":"2023-10-26T10:00:00Z","Latitude":1.0,"Longitude":2.0}""",
-      """{"Device_ID":"broken"""))
-    writeSpool(base, Sources.kafkaInput.outputTopic, Seq(
-      """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""))
-    writeSpool(base, Sources.httpInput.outputTopic, Seq(
-      """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}"""))
-    base
-  }
-
   test("S1-S7: every connector from pipeline.yaml is defined with its output topic") {
     val topics = Sources.all.map(s => s.name -> s.outputTopic).toMap
     assert(topics === Map(
@@ -45,7 +26,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("E1/E2 batch: three sources -> CMF topic union; poison quarantined per source") {
-    val base = spoolDir()
+    val base = vehicleSpoolDir()
     val cmf = Pipeline.vehicleCmfBatch(spark, base)
     assert(cmf.valid.count() === 3)
     assert(cmf.quarantine.count() === 1)
@@ -56,7 +37,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("E1/E2 streaming: same spool through readStream == batch output") {
-    val base = spoolDir()
+    val base = vehicleSpoolDir()
     val batchRows = Pipeline.vehicleCmfBatch(spark, base).valid
       .collect().map(_.getString(0)).sorted
     val q = Pipeline.vehicleCmfStream(spark, base).valid
@@ -83,7 +64,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("graft-spool V2: bridged sources resolve through the custom TableProvider") {
-    val base = spoolDir()
+    val base = vehicleSpoolDir()
     // batch plan is a DSv2 BatchScan over our table, not the text file source
     val plan = Sources.httpInput.batch(spark, base)
       .queryExecution.executedPlan.toString
@@ -224,7 +205,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("E1/E2 full topology: translators -> CMF -> Filterer -> bus, dead-letter replayable") {
-    val base = spoolDir()
+    val base = vehicleSpoolDir()
     val out = java.nio.file.Files.createTempDirectory("topology")
     val busRoot = s"$out/bus"
     val dlDir = s"$out/dead-letter"

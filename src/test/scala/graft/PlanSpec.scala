@@ -46,6 +46,32 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"router plan shuffles:\n$p")
   }
 
+  test("vehicle topology stages compile whole-stage, every method under the JIT limit") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // the batch form of runVehicleTopology's two queries: same expressions
+    val cmf = graft.pipeline.Pipeline.vehicleCmfBatch(spark, vehicleSpoolDir())
+    val publish = Filterer.route(cmf.valid).routed.select("topic", "value")
+    val deadLetter = cmf.quarantine.unionByName(
+      Filterer.route(cmf.valid).dropped.withColumn("source", lit("filterer")))
+    for ((name, df) <- Seq("publish" -> publish, "dead-letter" -> deadLetter)) {
+      val stages = df.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w }
+      assert(stages.nonEmpty, s"$name has no whole-stage codegen")
+      stages.foreach { w =>
+        // Janino rejects a method over 64 KB (and Spark silently falls
+        // back to the interpreted path); HotSpot never JIT-compiles one
+        // over 8,000 bytes of bytecode
+        val (_, code) = w.doCodeGen()
+        val (_, stats) = CodeGenerator.compile(code)
+        assert(stats.maxMethodCodeSize <= CodeGenerator.DEFAULT_JVM_HUGE_METHOD_LIMIT,
+          s"$name stage ${w.codegenStageId}: ${stats.maxMethodCodeSize}-byte method")
+      }
+      val builtInParse = df.queryExecution.optimizedPlan.toString.contains("try_to_timestamp")
+      assert(!builtInParse, s"$name parses ISO text with built-ins")
+    }
+  }
+
   test("cosineTopK: corpus never shuffles; one bounded exchange feeds the ranking window") {
     import spark.implicits._
     val corpus = (0L until 100L).map(i => (i, Seq.fill(8)(i / 100.0f)))

@@ -42,4 +42,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     nodes(df.queryExecution.executedPlan).count(_.nodeName.contains(token))
   }
+
+  def writeSpool(baseDir: String, topic: String, lines: Seq[String]): Unit = {
+    val dir = java.nio.file.Paths.get(baseDir, topic)
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.write(dir.resolve("part-0.txt"),
+      String.join("\n", lines: _*).getBytes("UTF-8"))
+  }
+
+  /** A spool base with one message per vehicle source topic plus one
+    * malformed Geotab record: 3 valid CMF messages, 1 quarantined. */
+  def vehicleSpoolDir(): String = {
+    val base = java.nio.file.Files.createTempDirectory("spool").toString
+    writeSpool(base, graft.sources.Sources.kinesisInput.outputTopic, Seq(
+      """{"Device_ID":"g1","Vehicle_ID":"v1","Record_DateTime":"2023-10-26T10:00:00Z","Latitude":1.0,"Longitude":2.0}""",
+      """{"Device_ID":"broken"""))
+    writeSpool(base, graft.sources.Sources.kafkaInput.outputTopic, Seq(
+      """{"unit_id":"c1","vid":"v2","msg_ts":1698314400,"gps_lat":3.0,"gps_lon":4.0}"""))
+    writeSpool(base, graft.sources.Sources.httpInput.outputTopic, Seq(
+      """{"vin":"v3","esn":"e3","captureTime":1698314400000,"coords":{"latValue":5.0,"lonValue":6.0,"ts":1698314395000}}"""))
+    base
+  }
 }
